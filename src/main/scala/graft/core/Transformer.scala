@@ -101,16 +101,26 @@ object Transformer {
     case _               => DObj.empty
   }
 
+  /** A `u` body with no update operator is a full-document replacement. */
+  private def isReplacement(o: DObj): Boolean =
+    !o.isEmpty && o.keys.forall(k => !k.startsWith("$"))
+
   /** `mergeOplogs` (C2/O4, reference src/processor.ts:260-297) — per-key
     * micro-batch compaction, the reference's only aggregation. Per key
     * `ns + _id`, events sorted by full 64-bit `ts`:
     *   - i overwrites;
-    *   - u after i folds `$set`/`$unset` into the inserted doc (T4) and
-    *     advances ts;
-    *   - u after u deep-merges the event bodies (later keys win) and
-    *     advances ts;
+    *   - u after i: a replacement becomes the inserted doc (keeping its
+    *     `_id`); a `$set`/`$unset` folds into it (T4). Either advances ts;
+    *   - a replacement u after u replaces the stored event;
+    *   - a `$set`/`$unset` u after a replacement u folds into the
+    *     replacement body (T4), which dispatch's fast path then reads;
+    *   - any other u after u deep-merges the event bodies (later keys
+    *     win) and advances ts;
     *   - u after d (or nothing) replaces the stored event;
     *   - d after i annihilates both; d otherwise wins.
+    * The reference folds every u after i as a `$set` (dropping a
+    * replacement) and deep-merges every u after u (so dispatch's
+    * replacement fast path ignores a later `$set`); both lost updates.
     * Output re-sorted by ts (stable, preserving first-touch key order for
     * equal timestamps, like the reference's JS object iteration).
     */
@@ -125,15 +135,21 @@ object Transformer {
             case None => // cannot key it; dropped later by validity filters
             case Some(id) =>
               val key = oplog.ns + id
+              def folded(doc: DObj) =
+                applyUpdateMongoDoc(task, doc, objAt(oplog.o, "$set"), objAt(oplog.o, "$unset"))
               store.get(key) match {
                 case Some(log) if log.op == "i" =>
-                  val newDoc = applyUpdateMongoDoc(
-                    task, log.o, objAt(oplog.o, "$set"), objAt(oplog.o, "$unset"))
+                  val newDoc =
+                    if (isReplacement(oplog.o))
+                      DObj(log.o.fields.filter(_._1 == "_id") ++ oplog.o.fields.filterNot(_._1 == "_id"))
+                    else folded(log.o)
                   store(key) = log.copy(o = newDoc, ts = oplog.ts)
-                case Some(log) if log.op == "u" =>
-                  val mergedO = Paths.merge(log.o, oplog.o).asInstanceOf[DObj]
-                  store(key) = log.copy(o = mergedO, ts = oplog.ts)
-                case _ =>
+                case Some(log) if log.op == "u" && !isReplacement(oplog.o) =>
+                  val o =
+                    if (isReplacement(log.o)) folded(log.o)
+                    else Paths.merge(log.o, oplog.o).asInstanceOf[DObj]
+                  store(key) = log.copy(o = o, ts = oplog.ts)
+                case _ => // a replacement after u, or any u after d / nothing
                   store(key) = oplog
               }
           }

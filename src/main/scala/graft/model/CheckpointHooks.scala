@@ -4,7 +4,7 @@ package graft.model
   * src/config.ts:83-114; Redis wiring in examples/example.js:9-18).
   *
   * The engine's EXACT resume state lives in the Spark streaming
-  * checkpoint + the state store VERSION pointer — strictly stronger
+  * checkpoint + the state store MANIFEST pointer — strictly stronger
   * than the reference's side-channel. These hooks exist for the same
   * reason the reference's do: letting a deployment mirror pipeline
   * progress into its own store (Redis, a metadata DB) for monitoring

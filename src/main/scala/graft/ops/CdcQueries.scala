@@ -200,7 +200,7 @@ object CdcQueries {
   // the source-fallback doc on first apply but re-applies its $set to
   // the sink doc on replay — the same divergence the reference's
   // Mongo-refetch path has. Cross-batch prior-state merging is pinned
-  // instead by BucketedStoreSpec's legacy-equivalence test.)
+  // instead by BucketedStoreSpec's multi-batch in-memory-fold test.)
   // Shared per-fixture-dir store (r10 verdict #7): the two-commit store
   // BUILD is a fixture, not the query — rebuilding the full lifecycle
   // (temp dir, two manifest-swapped commits, localCheckpoint, delete)

@@ -10,10 +10,13 @@ import graft.model.{CheckpointHooks, CheckpointSpec, EngineConfig, TaskDef, Task
   *
   *  - Phase `scan` (L5 start): batch backfill seeds the engine-owned
   *    state (reference scans the collection and bulk-indexes,
-  *    src/index.ts:27-32). The state store's VERSION pointer doubles as
-  *    the phase checkpoint: if it exists, the backfill already ran and a
-  *    restart goes straight to tailing (reference: persisted checkpoint
-  *    overrides `task.from`, src/index.ts:14-21).
+  *    src/index.ts:27-32). The state store's MANIFEST pointer doubles
+  *    as the phase checkpoint: if it exists, the backfill already ran
+  *    and a restart goes straight to tailing (reference: persisted
+  *    checkpoint overrides `task.from`, src/index.ts:14-21). A
+  *    directory still in the retired VERSION/v_N layout is refused
+  *    before any backfill could write into it
+  *    ([[StateStore.requireNoLegacyLayout]]).
   *  - Phase `tail` (L5 end): the streaming query, whose own
   *    checkpointLocation gives exact resume (replacing the reference's
   *    `now - 10 s` overlap heuristic, src/processor.ts:388); replays
@@ -30,12 +33,9 @@ object Runner {
       skipScan: Boolean = false, // from.phase == "tail": no backfill
       fromTs: Long = 0L, // tail start (packed BSON ts lower bound, P3)
       name: String = "", // checkpoint name for the user hooks
-      // Some(spec): incremental bucketed state — the DEFAULT at every
-      // entry point (VERDICT r7 #2); None: explicit opt-out to the
-      // legacy full-rewrite versioned state (tiny-state deployments).
-      // An existing state layout overrides either request on restart
-      // (StateStore.resolveBackend).
-      buckets: Option[BucketedStateStore.Spec] = Some(BucketedStateStore.Spec()),
+      // bucketed state tuning; an existing store's bucket count (in
+      // its manifest) overrides `spec.nBuckets` on restart
+      spec: BucketedStateStore.Spec = BucketedStateStore.Spec(),
       // FailFast: a poison micro-batch stops the tail (checkpoint
       // resumes at it); TailQuery.skipAndCount(spark): the reference's
       // log-and-keep-tailing policy with accumulator-counted skips
@@ -59,7 +59,7 @@ object Runner {
   ): StreamingQuery = {
     val alreadyScanned = StateStore.exists(cfg.stateDir)
     if (!alreadyScanned && !cfg.skipScan) {
-      ScanJob.backfill(sourceSnapshot, cfg.task, cfg.stateDir, cfg.buckets, cfg.bulk)
+      ScanJob.backfill(sourceSnapshot, cfg.task, cfg.stateDir, cfg.spec, cfg.bulk)
       // the endScan phase flip (reference src/config.ts:77-81): tell
       // user persistence the backfill is done and tailing begins
       CheckpointHooks.save(hooks, cfg.name, CheckpointHooks.tailNow())
@@ -68,7 +68,7 @@ object Runner {
       oplogStream, cfg.task, cfg.ns, fromTs = cfg.fromTs,
       stateDir = cfg.stateDir, checkpointDir = cfg.checkpointDir,
       source = Some(sourceSnapshot), triggerMs = cfg.triggerMs,
-      taskName = cfg.name, hooks = hooks, buckets = cfg.buckets,
+      taskName = cfg.name, hooks = hooks, spec = cfg.spec,
       failurePolicy = cfg.failurePolicy, bulk = cfg.bulk)
   }
 
@@ -117,9 +117,6 @@ object Runner {
       // (task, source options) -> (snapshot, oplog stream)
       adapters: (TaskDef, Map[String, String]) => (DataFrame, DataFrame),
       hooks: Option[CheckpointHooks] = None,
-      // config-driven engine runs default to the incremental bucketed
-      // state: per-trigger cost tracks the batch, not the state size
-      buckets: Option[BucketedStateStore.Spec] = Some(BucketedStateStore.Spec()),
       // applied to every task's tail (the reference config has no such
       // knob — its processor hardcodes log-and-continue; here the safe
       // fail-fast is the default and skip-and-count is a deliberate
@@ -168,7 +165,6 @@ object Runner {
         skipScan = from.phase == "tail",
         fromTs = from.timeEpochSeconds.map(_ << 32).getOrElse(0L),
         name = td.name,
-        buckets = buckets,
         failurePolicy = failurePolicy,
         bulk = bulkRoot.map(r => TailQuery.BulkSpec(
           s"$r/$dirName",

@@ -37,14 +37,13 @@ object ScanJob {
 
   /** Backfill: scan -> IRs -> seed the state store (phase transition L5
     * start; reference src/index.ts:27-32). Returns the seeded state.
-    * With `buckets` set, seeds the incremental [[BucketedStateStore]]
-    * (one id-sorted base file per bucket) instead of the legacy
-    * versioned layout. */
+    * Seeds the incremental [[BucketedStateStore]]: one id-sorted base
+    * file per bucket, manifest seq 0. */
   def backfill(
       source: DataFrame,
       task: TaskSpec,
       stateDir: String,
-      buckets: Option[BucketedStateStore.Spec] = None,
+      spec: BucketedStateStore.Spec = BucketedStateStore.Spec(),
       // load leg for the scan phase too: the reference bulk-indexes the
       // backfill (src/index.ts:27-32 scans and ships _bulk bodies), so
       // with a BulkSpec the seeded state mirrors out as one
@@ -52,12 +51,10 @@ object ScanJob {
       bulk: Option[TailQuery.BulkSpec] = None,
   ): DataFrame = {
     val spark = source.sparkSession
+    StateStore.requireNoLegacyLayout(stateDir)
     val irs = run(source, task)
     val state = StateStore.applyIRs(StateStore.empty(spark), irs)
-    buckets match {
-      case Some(spec) => BucketedStateStore.seed(state, stateDir, spec)
-      case None       => StateStore.write(state, stateDir)
-    }
+    BucketedStateStore.seed(state, stateDir, spec)
     val seeded = StateStore.read(spark, stateDir)
     bulk.foreach { b =>
       import org.apache.spark.sql.functions.{col, lit}

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.cdc.{BatchApplier, BucketedStateStore, Compactor, OplogRow, StateStore}
+import graft.cdc.{BucketedStateStore, Compactor, OplogRow, StateStore}
 import graft.model.{CheckpointHooks, TaskSpec}
 
 /** The streaming tail phase (reference src/processor.ts:332-396,
@@ -132,14 +132,11 @@ object TailQuery {
   /** Start the tail stream. `oplogStream` must be a streaming DataFrame
     * with the OplogRow schema (ts, op, ns, id, doc, fromMigrate).
     *
-    * `buckets = Some(spec)` selects the incremental
-    * [[BucketedStateStore]]: per trigger, point-lookup the batch's keys
-    * and append per-bucket deltas — O(batch) cost, the 100 TB path and
-    * the DEFAULT (the measured crossover says the legacy full-rewrite
-    * store only wins below ~5M tiny docs — BASELINE.md r7 addendum).
-    * `None` opts out to the legacy versioned store. Either way an
-    * EXISTING state layout wins over the request
-    * ([[StateStore.resolveBackend]]) so restarts never fork the state. */
+    * State lives in the incremental [[BucketedStateStore]] tuned by
+    * `spec`: per trigger, point-lookup the batch's keys and append one
+    * shared delta — O(batch) cost. A directory still in the retired
+    * VERSION/v_N layout is refused up front
+    * ([[StateStore.requireNoLegacyLayout]]). */
   def start(
       oplogStream: DataFrame,
       task: TaskSpec,
@@ -151,13 +148,12 @@ object TailQuery {
       triggerMs: Long = 5000L,
       taskName: String = "",
       hooks: Option[CheckpointHooks] = None,
-      buckets: Option[BucketedStateStore.Spec] = Some(BucketedStateStore.Spec()),
+      spec: BucketedStateStore.Spec = BucketedStateStore.Spec(),
       failurePolicy: FailurePolicy = FailFast,
       bulk: Option[BulkSpec] = None,
   ): StreamingQuery = {
-    val spark = oplogStream.sparkSession
     import OplogRow.encoder
-    val effectiveBuckets = StateStore.resolveBackend(stateDir, buckets)
+    StateStore.requireNoLegacyLayout(stateDir)
     val metricsName = if (taskName.nonEmpty) s"tail_$taskName" else "tail"
     // in-flight quality metrics (rows, null ids, ts high-water mark)
     // per micro-batch — readable from progress.observedMetrics by any
@@ -177,38 +173,16 @@ object TailQuery {
         // files once instead of twice.
         batch.persist()
         try {
-          // an empty trigger applies nothing: no state rewrite, no
+          // an empty trigger applies nothing: no state commit, no
           // hook — the reference likewise only checkpoints batches
           // that loaded IRs (src/processor.ts:382-390)
-          val batchRows = batch.count()
-          if (batchRows > 0) {
-            effectiveBuckets match {
-              case Some(spec) =>
-                // incremental: touch only the batch's keys and buckets;
-                // the bulk load leg taps the same outcomes the delta
-                // commit writes — no second fold
-                BucketedStateStore.applyBatch(
-                  batch.as[OplogRow], task, stateDir, spec, source,
-                  onOutcomes = bulk.map(b => (o: DataFrame) => writeBulk(o, b, batchId)))
-              case None =>
-                val st = StateStore.read(spark, stateDir)
-                // fused compact+dispatch+merge: one co-grouped shuffle per
-                // batch. The row count upper-bounds the distinct-key count,
-                // so it serves as the broadcast-cap probe without the apply
-                // paying a separate distinct-count job per trigger. Delete
-                // outcomes are kept so the bulk leg sees them; the state
-                // write filters its tombstones exactly as applyOplogBatch.
-                val outcomes0 = BatchApplier.applyOplogBatchKeepDeletes(
-                  batch.as[OplogRow], st, task, source, batchKeyCount = Some(batchRows))
-                val outcomes = if (bulk.isDefined) outcomes0.persist() else outcomes0
-                try {
-                  StateStore.write(
-                    outcomes.filter(org.apache.spark.sql.functions.col("action") =!= "delete")
-                      .drop("action"),
-                    stateDir)
-                  bulk.foreach(b => writeBulk(outcomes, b, batchId))
-                } finally if (bulk.isDefined) { outcomes.unpersist(); () }
-            }
+          if (batch.count() > 0) {
+            // incremental: touch only the batch's keys and buckets; the
+            // bulk load leg taps the same outcomes the delta commit
+            // writes — no second fold
+            BucketedStateStore.applyBatch(
+              batch.as[OplogRow], task, stateDir, spec, source,
+              onOutcomes = bulk.map(b => (o: DataFrame) => writeBulk(o, b, batchId)))
             // mirror tail progress to user persistence (L4 side channel);
             // failures never kill the batch — the authoritative
             // checkpoint is Spark's

@@ -186,7 +186,7 @@ object Ddl {
     * table every 5 s trigger would re-create the O(state)-per-batch
     * cost the bucketed store exists to avoid. Serving layers that need
     * per-trigger freshness read the state store itself
-    * ([[graft.cdc.StateStore.read]] resolves either backend); a
+    * ([[graft.cdc.StateStore.read]]); a
     * Delta/Iceberg-backed table would instead MERGE the per-batch
     * deltas. */
   def publishState(

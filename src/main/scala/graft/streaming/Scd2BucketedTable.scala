@@ -8,10 +8,8 @@ import graft.cdc.StateIO
 import graft.cdc.BucketedStateStore.{BucketFiles, Manifest}
 
 /** Bucketed, log-structured persistence for the streaming SCD2 history
-  * — the 100 TB form of [[StreamScd2.Scd2Table]] (round-9 verdict
-  * "What's wrong" #1: the versioned table rewrote the ENTIRE history
-  * every micro-batch, O(history) per trigger; this makes the
-  * per-trigger cost a function of the BATCH).
+  * (opened by [[StreamScd2.table]]): the per-trigger cost is a function
+  * of the BATCH, never of the whole history.
   *
   * Same manifest/delta discipline as [[graft.cdc.BucketedStateStore]]
   * (whose Manifest rendering it reuses), adapted to history semantics:
@@ -54,7 +52,7 @@ final class Scd2BucketedTable(
     nBuckets: Int = 16,
     compactThreshold: Int = 8,
     retainManifests: Int = 3,
-    keyType: DataType = LongType) extends StreamScd2.Scd2History {
+    keyType: DataType = LongType) {
 
   private val historyCols = StreamScd2.historySchema(keyType).fieldNames.toSeq
 
@@ -336,7 +334,7 @@ final class Scd2BucketedTable(
   }
 
   /** One-time seed of a FRESH bucketed layout from a complete history
-    * frame — the offline legacy→bucketed migration entry point
+    * frame — the offline VERSION/v_N → bucketed migration entry point
     * ([[graft.tools.MigrateState]]): every key's chain lands as the
     * initial per-bucket BASE (manifest seq 0), and the pointer carries
     * `lastBatchId` so the resuming tail's replay guard survives the

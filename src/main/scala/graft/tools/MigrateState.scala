@@ -1,27 +1,30 @@
 package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.cdc.{BucketedStateStore, StateIO, StateStore}
+import org.apache.spark.sql.types.LongType
+import graft.cdc.{BucketedStateStore, StateIO}
 import graft.streaming.{Scd2BucketedTable, StreamScd2}
 
-/** Offline legacy→bucketed state migration (VERDICT r10 "What's
-  * missing" #2): the existing-layout-is-authoritative rule
-  * ([[StateStore.resolveBackend]], [[StreamScd2.table]]) is right for
-  * safety but permanently locks a pre-r7 deployment — or any history
-  * that ever committed legacy — into the O(state)-per-trigger rewrite
-  * path. This tool closes that: read the legacy VERSION store, write
-  * an equivalent bucketed base + manifest INTO THE SAME directory,
-  * verify row-level equality, and only then retire the legacy pointer.
+/** Offline, one-way migration from the retired full-rewrite layout
+  * (a `VERSION` pointer over `v_N` parquet directories, used by the CDC
+  * state and by SCD2 history) to the bucketed manifest+delta layout
+  * the engine reads and writes. The engine refuses a directory that
+  * still holds a `VERSION` pointer
+  * ([[graft.cdc.StateStore.requireNoLegacyLayout]]), and this tool is
+  * the only code that still reads `v_N`: it reads the legacy store
+  * read-only, writes an equivalent bucketed base + manifest INTO THE
+  * SAME directory, verifies row-level equality, and only then retires
+  * the legacy pointer.
   *
-  * Crash-safety comes from the backends' own resolution order: both
-  * `StateStore.read` and `StreamScd2.table` prefer a legacy VERSION
-  * pointer over a bucketed manifest, so every intermediate state of
-  * this migration (bucketed files written, manifest written, verify
-  * running, crash anywhere) still reads as the untouched legacy store.
-  * The single pointer-delete at the end IS the swap; the legacy
-  * pointer's content is preserved in `VERSION.premigration` and the
-  * `v_N` data directories are left on disk for manual rollback
-  * (restore the pointer file and delete MANIFEST + data/).
+  * Crash safety: the pointer-delete at the end IS the swap. Before it,
+  * the `VERSION` pointer is still in place, so after a crash at any
+  * earlier step (bucketed files written, manifest written, verify
+  * running) the engine refuses the directory instead of reading it,
+  * and the legacy `v_N` data is untouched; a re-run refuses too once
+  * the manifest was written. The pointer's content is preserved in
+  * `VERSION.premigration` and the `v_N` directories stay on disk for
+  * manual rollback (restore the pointer file and delete MANIFEST,
+  * manifest/, data/ and, for SCD2, KEYTYPE).
   *
   * Run: `sbt "runMain graft.tools.MigrateState <cdc|scd2> <dir> [nBuckets]"`.
   */
@@ -41,21 +44,25 @@ object MigrateState {
     an.exceptAll(bn).count() + bn.exceptAll(an).count()
   }
 
-  /** Migrate a legacy CDC [[StateStore]] (VERSION + v_N parquet) to the
-    * incremental [[BucketedStateStore]] layout in place. No-op error if
-    * the dir holds no legacy store. */
+  /** The legacy `VERSION` pointer's content, if `dir` holds one. */
+  private def legacyPointer(dir: String): Option[String] =
+    if (StateIO.exists(s"$dir/VERSION")) Some(StateIO.readString(s"$dir/VERSION").trim)
+    else None
+
+  /** Migrate a legacy CDC state (`VERSION` holds "N", the state is the
+    * `v_N` parquet directory) to the incremental [[BucketedStateStore]]
+    * layout in place. Error if the dir holds no legacy store. */
   def migrateCdc(spark: SparkSession, dir: String,
       spec: BucketedStateStore.Spec = BucketedStateStore.Spec()): Report = {
-    if (StateStore.currentVersion(dir).isEmpty)
-      throw new IllegalStateException(s"$dir holds no legacy VERSION store to migrate")
+    // snapshot the pointer ONCE; everything below (legacy read, seed,
+    // verify, swap) is keyed to this content so a live writer moving the
+    // pointer mid-migration is caught by the CAS in swapOutLegacy
+    val pointer0 = legacyPointer(dir).getOrElse(
+      throw new IllegalStateException(s"$dir holds no legacy VERSION store to migrate"))
     require(!BucketedStateStore.exists(dir),
       s"$dir already holds a bucketed manifest — refusing to overwrite " +
         "(an earlier migration may have been interrupted after its swap; " +
         "inspect VERSION.premigration)")
-    // snapshot the pointer ONCE; everything below (legacy read, seed,
-    // verify, swap) is keyed to this content so a live writer moving the
-    // pointer mid-migration is caught by the CAS in swapOutLegacy
-    val pointer0 = StateIO.readString(s"$dir/VERSION").trim
     val legacy = spark.read.parquet(s"$dir/v_${pointer0.toInt}")
     BucketedStateStore.seed(legacy, dir, spec)
     val diff = diffCount(legacy, BucketedStateStore.read(spark, dir))
@@ -70,23 +77,33 @@ object MigrateState {
     Report("cdc", dir, legacy.count(), spec.nBuckets, -1L)
   }
 
-  /** Migrate a legacy [[StreamScd2.Scd2Table]] history (VERSION holds
-    * "version lastBatchId") to [[Scd2BucketedTable]] in place. The
-    * legacy pointer's lastBatchId is carried into the bucketed pointer,
-    * so a resuming tail's foreachBatch replay guard is preserved
-    * exactly across the backend switch. */
+  /** Migrate a legacy SCD2 history (`VERSION` holds "N lastBatchId",
+    * the history is the `v_N` parquet directory; N = -1 before the
+    * first data commit) to [[Scd2BucketedTable]] in place. The legacy
+    * lastBatchId is carried into the bucketed pointer, so a resuming
+    * tail's foreachBatch replay guard is preserved exactly across the
+    * layout switch. */
   def migrateScd2(spark: SparkSession, dir: String, nBuckets: Int = 16): Report = {
-    if (!StateIO.exists(s"$dir/VERSION"))
-      throw new IllegalStateException(s"$dir holds no legacy VERSION history to migrate")
+    val pointer0 = legacyPointer(dir).getOrElse(
+      throw new IllegalStateException(s"$dir holds no legacy VERSION history to migrate"))
     require(!Scd2BucketedTable.exists(dir),
       s"$dir already holds a bucketed manifest — refusing to overwrite " +
         "(an earlier migration may have been interrupted after its swap; " +
         "inspect VERSION.premigration)")
-    val pointer0 = StateIO.readString(s"$dir/VERSION").trim
-    val keyType = legacyScd2KeyType(spark, dir, pointer0)
-    val legacyTable = new StreamScd2.Scd2Table(spark, dir, keyType = keyType)
-    val legacy = legacyTable.read()
-    val lastBatchId = legacyTable.lastBatchId
+    val (version, lastBatchId) = pointer0.split(' ') match {
+      case Array(v, b) => (v.toInt, b.toLong)
+      case Array(v)    => (v.toInt, -1L)
+    }
+    // the legacy layout records no KEYTYPE: the current version's
+    // parquet schema carries the key type; the explicit history schema
+    // then reads the data
+    val (legacy, keyType) =
+      if (version < 0) (StreamScd2.emptyHistory(spark), LongType)
+      else {
+        val path = s"$dir/v_$version"
+        val kt = spark.read.parquet(path).schema("key").dataType
+        (spark.read.schema(StreamScd2.historySchema(kt)).parquet(path), kt)
+      }
     val bucketed = new Scd2BucketedTable(spark, dir, nBuckets = nBuckets, keyType = keyType)
     bucketed.seed(legacy, lastBatchId)
     val diff = diffCount(legacy, bucketed.read())
@@ -99,27 +116,19 @@ object MigrateState {
     Report("scd2", dir, legacy.count(), nBuckets, lastBatchId)
   }
 
-  /** The legacy history's key type, read from its current version's
-    * parquet schema (the legacy backend records no KEYTYPE file). */
-  private def legacyScd2KeyType(spark: SparkSession, dir: String, pointer: String) = {
-    val v = pointer.split(' ')(0).toInt
-    if (v < 0) org.apache.spark.sql.types.LongType
-    else spark.read.parquet(s"$dir/v_$v").schema("key").dataType
-  }
+  /** Test hook: runs immediately before the pointer-swap CAS check,
+    * letting the spec interpose a concurrent legacy writer (the same
+    * discipline as the online commits' preSwap hooks). */
+  private[tools] var preSwapHook: () => Unit = () => ()
 
   /** The swap: CAS-check that the legacy pointer still holds the exact
     * content the migration snapshotted at start (the tool is documented
     * offline, but nothing else enforces it — a live tail committing a
     * new legacy version mid-migration would otherwise be silently
     * dropped from the bucketed layout), preserve the pointer content
-    * for rollback, then remove the pointer — from here both backends'
-    * resolution order selects the bucketed layout. The v_N data dirs
-    * stay on disk. Mirrors the online commits' checkPointerUnmoved. */
-  /** Test hook: runs immediately before the pointer-swap CAS check,
-    * letting the spec interpose a concurrent legacy writer (the same
-    * discipline as the online commits' preSwap hooks). */
-  private[tools] var preSwapHook: () => Unit = () => ()
-
+    * for rollback, then remove the pointer — from here the engine opens
+    * the directory as the bucketed layout. The v_N data dirs stay on
+    * disk. Mirrors the online commits' checkPointerUnmoved. */
   private def swapOutLegacy(dir: String, pointerAtStart: String): Unit = {
     preSwapHook()
     val now = StateIO.readString(s"$dir/VERSION").trim

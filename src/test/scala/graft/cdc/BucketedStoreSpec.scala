@@ -8,7 +8,8 @@ import graft.model.{BsonTs, TaskSpec}
 
 /** The incremental bucketed state store: per-micro-batch cost must track
   * the BATCH (dirty buckets only), never the full state — and the result
-  * must be indistinguishable from the legacy full-rewrite path. */
+  * must be indistinguishable from an in-memory full-rewrite fold
+  * (`BatchApplier.applyOplogBatch` over the whole state). */
 class BucketedStoreSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -46,23 +47,17 @@ class BucketedStoreSpec extends AnyFunSuite {
     StateStore.read(spark, dir).collect()
       .map(r => r.getAs[String]("id") -> (r.getAs[String]("doc"), r.getAs[Long]("ts"))).toMap
 
-  test("time travel: readAt reproduces each retained commit exactly, on both backends") {
+  test("time travel: readAt reproduces each retained commit exactly") {
     val bdir = tmp("bucketed-tt")
-    val ldir = tmp("legacy-tt")
     // wide retention so every commit in the window stays readable (the
     // tight default's history bounding is pinned by the vacuum test)
     val ttSpec = spec.copy(retainManifests = 10)
     // snapshot the expected state AFTER each commit as we go
     var bucketedWant = Vector.empty[(Long, Map[String, (String, Long)])]
-    var legacyWant = Vector.empty[(Int, Map[String, (String, Long)])]
     batches.foreach { b =>
       val ds = spark.createDataset(b)
       val seq = BucketedStateStore.applyBatch(ds, task, bdir, ttSpec, Some(source))
       bucketedWant :+= (seq, readMap(bdir))
-      val v = StateStore.write(
-        BatchApplier.applyOplogBatch(ds, StateStore.read(spark, ldir), task, Some(source)), ldir)
-      legacyWant :+= (v, StateStore.read(spark, ldir).collect()
-        .map(r => r.getAs[String]("id") -> (r.getAs[String]("doc"), r.getAs[Long]("ts"))).toMap)
     }
     // every commit STILL RETAINED reads back AS OF exactly; older ones
     // may be None (retention/compaction policy — pinned elsewhere), and
@@ -83,25 +78,25 @@ class BucketedStoreSpec extends AnyFunSuite {
       assert(readable === want.size,
         s"$name: with wide retention every commit must stay readable ($readable/${want.size})")
     }
-    check("bucketed", s => BucketedStateStore.readAt(spark, bdir, s), bucketedWant)
-    check("legacy", v => StateStore.readAt(spark, ldir, v.toInt),
-      legacyWant.map { case (v, m) => (v.toLong, m) })
+    check("BucketedStateStore", s => BucketedStateStore.readAt(spark, bdir, s), bucketedWant)
+    check("StateStore", s => StateStore.readAt(spark, bdir, s), bucketedWant)
     // a never-written future version is None, not an error
-    assert(StateStore.readAt(spark, ldir, 999).isEmpty)
+    assert(StateStore.readAt(spark, bdir, 999L).isEmpty)
     assert(BucketedStateStore.readAt(spark, bdir, 999L).isEmpty)
   }
 
-  test("multi-batch apply matches the legacy full-rewrite path exactly") {
+  test("multi-batch apply matches an in-memory applyOplogBatch fold exactly") {
     val bdir = tmp("bucketed-eq")
-    val ldir = tmp("legacy-eq")
+    // the reference: every batch re-folds the WHOLE state in memory
+    var ref = StateStore.empty(spark)
     batches.foreach { b =>
       val ds = spark.createDataset(b)
       BucketedStateStore.applyBatch(ds, task, bdir, spec, Some(source))
-      val st = StateStore.read(spark, ldir)
-      StateStore.write(BatchApplier.applyOplogBatch(ds, st, task, Some(source)), ldir)
+      ref = BatchApplier.applyOplogBatch(ds, ref, task, Some(source)).localCheckpoint()
     }
     val got = readMap(bdir)
-    val want = readMap(ldir)
+    val want = ref.collect()
+      .map(r => r.getAs[String]("id") -> (r.getAs[String]("doc"), r.getAs[Long]("ts"))).toMap
     assert(got === want)
     // and the values are what the CDC semantics demand
     assert(got("a")._1 === """{"_id":"a","value":12.0}""")
@@ -109,6 +104,28 @@ class BucketedStoreSpec extends AnyFunSuite {
     assert(!got.contains("c"))
     assert(got("z")._1 === """{"_id":"z","value":50.0}""") // source-authoritative fallback
     assert(!got.contains("y")) // untouched source keys never enter state
+  }
+
+  test("full replacements inside one batch: no update is lost") {
+    val dir = tmp("bucketed-replace")
+    BucketedStateStore.seed(Seq(
+      ("p", """{"_id":"p","value":10.0}""", null: String, 0L),
+      ("q", """{"_id":"q","value":30.0}""", null: String, 0L),
+    ).toDF("id", "doc", "parent", "ts"), dir, spec)
+    BucketedStateStore.applyBatch(spark.createDataset(Seq(
+      // insert, then a replacement of the new doc
+      ev(1, 0, "i", "r", """{"_id":"r","value":1.0}"""),
+      ev(1, 1, "u", "r", """{"_id":"r","value":2.0}"""),
+      // a replacement, then a $set on top of it
+      ev(1, 2, "u", "p", """{"_id":"p","value":20.0}"""),
+      ev(1, 3, "u", "p", """{"$set":{"value":21.0}}"""),
+      // a $set, then a replacement that supersedes it
+      ev(1, 4, "u", "q", """{"$set":{"value":31.0}}"""),
+      ev(1, 5, "u", "q", """{"_id":"q","value":32.0}"""))), task, dir, spec)
+    assert(readMap(dir).map { case (k, (doc, _)) => k -> doc } === Map(
+      "p" -> """{"_id":"p","value":21.0}""",
+      "q" -> """{"_id":"q","value":32.0}""",
+      "r" -> """{"_id":"r","value":2.0}"""))
   }
 
   test("a commit writes deltas only for dirty buckets; cold buckets' files are untouched") {
@@ -405,21 +422,5 @@ class BucketedStoreSpec extends AnyFunSuite {
     assert(BucketedStateStore.Manifest.parse(m.render) === m)
     // and a second render of the parse is byte-identical (stable order)
     assert(BucketedStateStore.Manifest.parse(m.render).render === m.render)
-  }
-
-  test("legacy store prunes versions older than the retention window") {
-    val dir = tmp("legacy-prune")
-    (0 until 5).foreach { i =>
-      val st = Seq((s"k$i", s"""{"_id":"k$i"}""", null: String, i.toLong))
-        .toDF("id", "doc", "parent", "ts")
-      StateStore.write(st, dir, retain = 2)
-    }
-    assert(StateStore.currentVersion(dir) === Some(4))
-    val vdirs = Files.list(JPaths.get(dir)).iterator()
-    val names = new scala.collection.mutable.ArrayBuffer[String]
-    while (vdirs.hasNext) names += vdirs.next().getFileName.toString
-    assert(names.filter(_.startsWith("v_")).toSet === Set("v_3", "v_4"))
-    // current version still reads
-    assert(StateStore.read(spark, dir).collect().head.getAs[String]("id") === "k4")
   }
 }

@@ -61,20 +61,6 @@ class StateIOSchemeSpec extends AnyFunSuite {
     assert(prior.collect().map(_.getAs[String]("id")).toSet === Set("a", "k2"))
   }
 
-  test("legacy store: versioned writes, pointer swap and pruning over graftfs:") {
-    registerScheme()
-    val dir = s"graftfs:${Files.createTempDirectory("graftfs-legacy")}"
-    (0 until 4).foreach { i =>
-      val st = Seq((s"k$i", s"""{"_id":"k$i"}""", null: String, i.toLong))
-        .toDF("id", "doc", "parent", "ts")
-      StateStore.write(st, dir, retain = 2)
-    }
-    assert(StateStore.currentVersion(dir) === Some(3))
-    assert(StateStore.read(spark, dir).collect().head.getAs[String]("id") === "k3")
-    val vdirs = StateIO.list(dir).map(_.getPath.getName).filter(_.startsWith("v_")).toSet
-    assert(vdirs === Set("v_2", "v_3"), s"pruning must run through the scheme: $vdirs")
-  }
-
   test("both stores accept explicit file: URIs") {
     val bdir = s"file:${Files.createTempDirectory("fileuri-bucketed")}"
     BucketedStateStore.applyBatch(
@@ -82,9 +68,10 @@ class StateIOSchemeSpec extends AnyFunSuite {
       task, bdir, spec)
     assert(StateStore.read(spark, bdir).collect().map(_.getAs[String]("id")).toSet === Set("x"))
 
-    val ldir = s"file:${Files.createTempDirectory("fileuri-legacy")}"
-    StateStore.write(Seq(("y", """{"_id":"y"}""", null: String, 1L))
-      .toDF("id", "doc", "parent", "ts"), ldir)
-    assert(StateStore.read(spark, ldir).collect().map(_.getAs[String]("id")).toSet === Set("y"))
+    val hdir = s"file:${Files.createTempDirectory("fileuri-scd2")}/hist"
+    val hist = graft.streaming.StreamScd2.table(spark, hdir)
+    assert(hist.applyIfNew(Seq((1L, "a", 10L, 1L)).toDF("key", "attr", "sec", "event_id"), 0L))
+    assert(graft.streaming.StreamScd2.table(spark, hdir).read()
+      .collect().map(_.getAs[Long]("key")).toSet === Set(1L))
   }
 }

@@ -83,6 +83,59 @@ class CompactorSpec extends AnyFunSuite {
       upd((1, 0), DObj("$set" -> DObj("field0.field1" -> DInt(20), "keep" -> DStr("a"))))))
   }
 
+  // --- full-document replacements: goldens written by hand from Mongo
+  // semantics (the reference folds these as `$set`s and loses updates) ---
+  test("insert then full replacement: the replacement body becomes the insert") {
+    val got = Transformer.mergeOplogs(task, Seq(
+      ins((0, 0), DObj("_id" -> DStr(id), "field0" -> DObj("field1" -> DInt(0)), "x" -> DInt(1))),
+      upd((1, 0), DObj("_id" -> DStr(id), "field0" -> DObj("field2" -> DInt(5)))),
+    ))
+    assert(got === Seq(
+      ins((1, 0), DObj("_id" -> DStr(id), "field0" -> DObj("field2" -> DInt(5))))))
+  }
+
+  test("full replacement then $set/$unset: the update folds into the replacement body") {
+    val got = Transformer.mergeOplogs(task, Seq(
+      upd((0, 0), DObj("_id" -> DStr(id),
+        "field0" -> DObj("field1" -> DInt(1), "field2" -> DInt(2)))),
+      upd((1, 0), DObj(
+        "$set" -> DObj("field0.field1" -> DInt(9)),
+        "$unset" -> DObj("field0.field2" -> DInt(1)))),
+    ))
+    assert(got === Seq(
+      upd((1, 0), DObj("_id" -> DStr(id), "field0" -> DObj("field1" -> DInt(9))))))
+  }
+
+  test("$set then full replacement: the replacement wins outright") {
+    val got = Transformer.mergeOplogs(task, Seq(
+      upd((0, 0), DObj("$set" -> DObj("field0.field1" -> DInt(1)))),
+      upd((1, 0), DObj("_id" -> DStr(id), "field0" -> DObj("field2" -> DInt(2)))),
+    ))
+    assert(got === Seq(
+      upd((1, 0), DObj("_id" -> DStr(id), "field0" -> DObj("field2" -> DInt(2))))))
+  }
+
+  test("full replacement then full replacement: the later body wins, nothing merges") {
+    val got = Transformer.mergeOplogs(task, Seq(
+      upd((0, 0), DObj("_id" -> DStr(id),
+        "field0" -> DObj("field1" -> DInt(1), "field2" -> DInt(2)))),
+      upd((1, 0), DObj("_id" -> DStr(id), "field0" -> DObj("field1" -> DInt(3)))),
+    ))
+    assert(got === Seq(
+      upd((1, 0), DObj("_id" -> DStr(id), "field0" -> DObj("field1" -> DInt(3))))))
+  }
+
+  test("insert, full replacement, $set: one insert carrying both") {
+    val got = Transformer.mergeOplogs(task, Seq(
+      ins((0, 0), DObj("_id" -> DStr(id), "field0" -> DObj("field1" -> DInt(0)))),
+      upd((1, 0), DObj("_id" -> DStr(id), "field0" -> DObj("field2" -> DInt(2)))),
+      upd((2, 0), DObj("$set" -> DObj("field0.field1" -> DInt(7)))),
+    ))
+    assert(got === Seq(
+      ins((2, 0), DObj("_id" -> DStr(id),
+        "field0" -> DObj("field2" -> DInt(2), "field1" -> DInt(7))))))
+  }
+
   // --- seeded property tests (SURVEY.md §5) ---
   private def randomOplog(rnd: scala.util.Random): Oplog = {
     val ts = BsonTs(rnd.nextInt(6), rnd.nextInt(6))

@@ -21,61 +21,6 @@ class RunnerSpec extends AnyFunSuite {
     StructField("ns", StringType), StructField("id", StringType),
     StructField("doc", StringType), StructField("fromMigrate", BooleanType)))
 
-  test("legacy opt-out: bootstrap backfills then tails; restart resumes without re-scanning") {
-    import OplogRow.encoder
-    val base = Files.createTempDirectory("runner").toString
-    val inDir = s"$base/in"
-    Files.createDirectories(java.nio.file.Paths.get(inDir))
-
-    // the "collection" snapshot: two docs
-    val snapshot = spark.createDataFrame(Seq(
-      ("a", """{"_id":"a","value":1.0}"""),
-      ("b", """{"_id":"b","value":2.0}"""),
-    )).toDF("id", "doc")
-
-    // stream batch 1: update a, insert c
-    spark.createDataset(Seq(
-      OplogRow(BsonTs(10, 0).toLong, "u", "db.c", "a", """{"$set":{"value":11.0}}"""),
-      OplogRow(BsonTs(10, 1).toLong, "i", "db.c", "c", """{"_id":"c","value":3.0}"""),
-    )).coalesce(1).write.parquet(s"$inDir/b1")
-
-    def stream() = spark.readStream.schema(oplogSchema)
-      .option("maxFilesPerTrigger", "1").option("recursiveFileLookup", "true").parquet(inDir)
-    // buckets = None is the explicit legacy opt-out (bucketed is the default)
-    val cfg = Runner.TaskPipeline(task, "db.c", s"$base/state", s"$base/ckpt",
-      buckets = None)
-
-    val q1 = Runner.bootstrapAndTail(spark, snapshot, stream(), cfg)
-    q1.processAllAvailable(); q1.stop()
-
-    val s1 = StateStore.read(spark, cfg.stateDir).collect()
-      .map(r => r.getAs[String]("id") -> r.getAs[String]("doc")).toMap
-    assert(s1 === Map(
-      "a" -> """{"_id":"a","value":11.0}""",
-      "b" -> """{"_id":"b","value":2.0}""",
-      "c" -> """{"_id":"c","value":3.0}""",
-    ))
-    val versionAfterFirst = StateStore.currentVersion(cfg.stateDir).get
-
-    // "restart": new batch lands, bootstrap again with same dirs
-    spark.createDataset(Seq(
-      OplogRow(BsonTs(20, 0).toLong, "d", "db.c", "b", """{"_id":"b"}"""),
-    )).coalesce(1).write.parquet(s"$inDir/b2")
-
-    val q2 = Runner.bootstrapAndTail(spark, snapshot, stream(), cfg)
-    q2.processAllAvailable(); q2.stop()
-
-    val s2 = StateStore.read(spark, cfg.stateDir).collect()
-      .map(r => r.getAs[String]("id") -> r.getAs[String]("doc")).toMap
-    assert(s2 === Map(
-      "a" -> """{"_id":"a","value":11.0}""",
-      "c" -> """{"_id":"c","value":3.0}""",
-    ))
-    // exactly one new state version: only b2 was processed on restart
-    // (streaming checkpoint skipped the committed b1)
-    assert(StateStore.currentVersion(cfg.stateDir).get === versionAfterFirst + 1)
-  }
-
   test("bucketed state: bootstrap backfills then tails; restart resumes without re-scanning") {
     import OplogRow.encoder
     val base = Files.createTempDirectory("runner-bucketed").toString
@@ -93,7 +38,7 @@ class RunnerSpec extends AnyFunSuite {
     def stream() = spark.readStream.schema(oplogSchema)
       .option("maxFilesPerTrigger", "1").option("recursiveFileLookup", "true").parquet(inDir)
     val cfg = Runner.TaskPipeline(task, "db.c", s"$base/state", s"$base/ckpt",
-      buckets = Some(graft.cdc.BucketedStateStore.Spec(nBuckets = 4, compactThreshold = 2)))
+      spec = graft.cdc.BucketedStateStore.Spec(nBuckets = 4, compactThreshold = 2))
 
     val q1 = Runner.bootstrapAndTail(spark, snapshot, stream(), cfg)
     q1.processAllAvailable(); q1.stop()
@@ -214,41 +159,67 @@ class RunnerSpec extends AnyFunSuite {
     assert(graft.cdc.BucketedStateStore.readManifest(s"$base/state2").get.seq >= 2)
   }
 
-  test("an existing legacy state layout overrides the bucketed default on restart") {
+  test("a legacy layout is refused until MigrateState converts it") {
     import OplogRow.encoder
-    val base = Files.createTempDirectory("runner-backend").toString
+    import graft.tools.{LegacyLayout, MigrateState}
+    import graft.streaming.StreamScd2
+    val base = Files.createTempDirectory("runner-legacy").toString
     val inDir = s"$base/in"
     Files.createDirectories(java.nio.file.Paths.get(inDir))
     val snapshot = spark.createDataFrame(
       Seq(("a", """{"_id":"a","value":1.0}"""))).toDF("id", "doc")
 
-    // an old deployment: legacy store seeded and tailed (explicit opt-out)
+    // an old deployment: CDC state and SCD2 history in the retired
+    // VERSION/v_N layout
+    val stateDir = s"$base/state"
+    LegacyLayout.writeCdc(spark.createDataFrame(Seq(
+      ("a", """{"_id":"a","value":1.0}""", null: String, 1L),
+      ("b", """{"_id":"b","value":2.0}""", null: String, 1L),
+    )).toDF("id", "doc", "parent", "ts"), stateDir)
+    val histDir = s"$base/hist"
+    def scd2Batch(key: Long, attr: String, sec: Long, eventId: Long) =
+      spark.createDataFrame(Seq((key, attr, sec, eventId))).toDF("key", "attr", "sec", "event_id")
+    LegacyLayout.writeScd2(spark, histDir, scd2Batch(1L, "a", 10L, 1L), batchId = 0L)
+    val stateFiles = LegacyLayout.dataFiles(stateDir)
+    val histFiles = LegacyLayout.dataFiles(histDir)
+
     spark.createDataset(Seq(
-      OplogRow(BsonTs(10, 0).toLong, "i", "db.c", "b", """{"_id":"b","value":2.0}"""),
+      OplogRow(BsonTs(10, 0).toLong, "i", "db.c", "c", """{"_id":"c","value":3.0}"""),
     )).coalesce(1).write.parquet(s"$inDir/b1")
     def stream() = spark.readStream.schema(oplogSchema)
       .option("maxFilesPerTrigger", "1").option("recursiveFileLookup", "true").parquet(inDir)
-    val legacyCfg = Runner.TaskPipeline(task, "db.c", s"$base/state", s"$base/ckpt",
-      buckets = None)
-    val q1 = Runner.bootstrapAndTail(spark, snapshot, stream(), legacyCfg)
-    q1.processAllAvailable(); q1.stop()
-    val versionBefore = StateStore.currentVersion(s"$base/state").get
+    val cfg = Runner.TaskPipeline(task, "db.c", stateDir, s"$base/ckpt")
 
-    // restart with the NEW default (bucketed requested): the existing
-    // VERSION layout must win — no manifest appears, versions advance
-    spark.createDataset(Seq(
-      OplogRow(BsonTs(20, 0).toLong, "i", "db.c", "c", """{"_id":"c","value":3.0}"""),
-    )).coalesce(1).write.parquet(s"$inDir/b2")
-    val defaultCfg = Runner.TaskPipeline(task, "db.c", s"$base/state", s"$base/ckpt")
-    val q2 = Runner.bootstrapAndTail(spark, snapshot, stream(), defaultCfg)
-    q2.processAllAvailable(); q2.stop()
+    // both entry points refuse, naming the migration tool...
+    val e1 = intercept[IllegalStateException] {
+      Runner.bootstrapAndTail(spark, snapshot, stream(), cfg)
+    }
+    assert(e1.getMessage.contains("MigrateState"), e1.getMessage)
+    val e2 = intercept[IllegalStateException](StreamScd2.table(spark, histDir))
+    assert(e2.getMessage.contains("MigrateState"), e2.getMessage)
+    // ...before anything was backfilled into or written over the legacy data
+    assert(!graft.cdc.BucketedStateStore.exists(stateDir))
+    assert(LegacyLayout.dataFiles(stateDir) === stateFiles)
+    assert(LegacyLayout.dataFiles(histDir) === histFiles)
 
-    assert(!graft.cdc.BucketedStateStore.exists(s"$base/state"),
-      "restart must not fork the state into a second backend")
-    assert(StateStore.currentVersion(s"$base/state").get === versionBefore + 1)
-    val got = StateStore.read(spark, s"$base/state")
-      .collect().map(_.getAs[String]("id")).toSet
-    assert(got === Set("a", "b", "c"))
+    // once migrated, the same directories tail normally: the migrated
+    // state counts as backfilled (no re-scan would drop `b`), and the
+    // history resumes after its last applied batch
+    MigrateState.migrateCdc(spark, stateDir, graft.cdc.BucketedStateStore.Spec(nBuckets = 4))
+    MigrateState.migrateScd2(spark, histDir, nBuckets = 4)
+    val q = Runner.bootstrapAndTail(spark, snapshot, stream(), cfg)
+    q.processAllAvailable(); q.stop()
+    val got = StateStore.read(spark, stateDir).collect()
+      .map(r => r.getAs[String]("id") -> r.getAs[String]("doc")).toMap
+    assert(got === Map(
+      "a" -> """{"_id":"a","value":1.0}""",
+      "b" -> """{"_id":"b","value":2.0}""",
+      "c" -> """{"_id":"c","value":3.0}""",
+    ))
+    val hist = StreamScd2.table(spark, histDir)
+    assert(hist.lastBatchId === 0L)
+    assert(hist.applyIfNew(scd2Batch(1L, "b", 20L, 2L), batchId = 1L))
+    assert(hist.read().count() === 2L)
   }
 
   test("fromConfig: a reference-format config drives the pipeline via the DSv2 source") {

@@ -49,56 +49,52 @@ class SchemaEvolutionSpec extends AnyFunSuite {
     } finally spark.sql(s"DROP TABLE `$table`")
   }
 
-  for ((label, buckets) <- Seq(
-      "bucketed" -> Some(BucketedStateStore.Spec(nBuckets = 4, compactThreshold = 2)),
-      "legacy" -> None)) {
-    test(s"$label state: restart with a widened mapping picks up the new field; old docs read NULL") {
-      import OplogRow.encoder
-      val base = Files.createTempDirectory(s"evolve-$label").toString
-      val inDir = s"$base/in"
-      Files.createDirectories(java.nio.file.Paths.get(inDir))
-      // source docs carry `k` from day one; mapping v1 ignores it
-      val snapshot = spark.createDataFrame(Seq(
-        ("a", """{"_id":"a","value":1.0,"k":7}"""),
-        ("b", """{"_id":"b","value":2.0,"k":8}"""),
-      )).toDF("id", "doc")
+  test("bucketed state: restart with a widened mapping picks up the new field; old docs read NULL") {
+    import OplogRow.encoder
+    val base = Files.createTempDirectory("evolve-bucketed").toString
+    val inDir = s"$base/in"
+    Files.createDirectories(java.nio.file.Paths.get(inDir))
+    // source docs carry `k` from day one; mapping v1 ignores it
+    val snapshot = spark.createDataFrame(Seq(
+      ("a", """{"_id":"a","value":1.0,"k":7}"""),
+      ("b", """{"_id":"b","value":2.0,"k":8}"""),
+    )).toDF("id", "doc")
+    spark.createDataset(Seq(
+      OplogRow(BsonTs(10, 0).toLong, "u", "db.c", "a", """{"$set":{"value":11.0}}"""),
+    )).coalesce(1).write.parquet(s"$inDir/b1")
+
+    def stream() = spark.readStream.schema(oplogSchema)
+      .option("maxFilesPerTrigger", "1").option("recursiveFileLookup", "true").parquet(inDir)
+    def cfg(task: TaskSpec) = Runner.TaskPipeline(task, "db.c", s"$base/state", s"$base/ckpt",
+      spec = BucketedStateStore.Spec(nBuckets = 4, compactThreshold = 2))
+
+    val q1 = Runner.bootstrapAndTail(spark, snapshot, stream(), cfg(v1))
+    q1.processAllAvailable(); q1.stop()
+
+    // mapping gains k -> k; the sink table widens, the state dirs stay
+    val loc = Files.createTempDirectory("evolve-bucketed-t").toString
+    val table = Ddl.createSinkTable(spark, "evolve_restart_bucketed", v1,
+      Map("value" -> "double"), location = Some(s"$loc/t"))
+    try {
+      assert(Ddl.migrateSinkTable(spark, table, v2, Map("value" -> "double", "k" -> "long"))
+        === Ddl.Widened(Seq("k")))
+
+      // restart with v2 against the SAME state/checkpoint dirs; a new
+      // event sets k for `a` only
       spark.createDataset(Seq(
-        OplogRow(BsonTs(10, 0).toLong, "u", "db.c", "a", """{"$set":{"value":11.0}}"""),
-      )).coalesce(1).write.parquet(s"$inDir/b1")
+        OplogRow(BsonTs(20, 0).toLong, "u", "db.c", "a", """{"$set":{"k":9}}"""),
+      )).coalesce(1).write.parquet(s"$inDir/b2")
+      val q2 = Runner.bootstrapAndTail(spark, snapshot, stream(), cfg(v2))
+      q2.processAllAvailable(); q2.stop()
 
-      def stream() = spark.readStream.schema(oplogSchema)
-        .option("maxFilesPerTrigger", "1").option("recursiveFileLookup", "true").parquet(inDir)
-      def cfg(task: TaskSpec) = Runner.TaskPipeline(
-        task, "db.c", s"$base/state", s"$base/ckpt", buckets = buckets)
-
-      val q1 = Runner.bootstrapAndTail(spark, snapshot, stream(), cfg(v1))
-      q1.processAllAvailable(); q1.stop()
-
-      // mapping gains k -> k; the sink table widens, the state dirs stay
-      val loc = Files.createTempDirectory(s"evolve-$label-t").toString
-      val table = Ddl.createSinkTable(spark, s"evolve_restart_$label", v1,
-        Map("value" -> "double"), location = Some(s"$loc/t"))
-      try {
-        assert(Ddl.migrateSinkTable(spark, table, v2, Map("value" -> "double", "k" -> "long"))
-          === Ddl.Widened(Seq("k")))
-
-        // restart with v2 against the SAME state/checkpoint dirs; a new
-        // event sets k for `a` only
-        spark.createDataset(Seq(
-          OplogRow(BsonTs(20, 0).toLong, "u", "db.c", "a", """{"$set":{"k":9}}"""),
-        )).coalesce(1).write.parquet(s"$inDir/b2")
-        val q2 = Runner.bootstrapAndTail(spark, snapshot, stream(), cfg(v2))
-        q2.processAllAvailable(); q2.stop()
-
-        assert(Ddl.publishState(spark, table, s"$base/state") === 2L)
-        val rows = spark.table(table).collect()
-          .map(r => r.getAs[String]("_id") ->
-            (r.getAs[java.lang.Double]("value"), r.getAs[java.lang.Long]("k"))).toMap
-        // a: updated under v2 -> k present; b: untouched old doc -> k NULL
-        assert(rows("a") === ((11.0, 9L)))
-        assert(rows("b")._1 === 2.0)
-        assert(rows("b")._2 === null)
-      } finally spark.sql(s"DROP TABLE `$table`")
-    }
+      assert(Ddl.publishState(spark, table, s"$base/state") === 2L)
+      val rows = spark.table(table).collect()
+        .map(r => r.getAs[String]("_id") ->
+          (r.getAs[java.lang.Double]("value"), r.getAs[java.lang.Long]("k"))).toMap
+      // a: updated under v2 -> k present; b: untouched old doc -> k NULL
+      assert(rows("a") === ((11.0, 9L)))
+      assert(rows("b")._1 === 2.0)
+      assert(rows("b")._2 === null)
+    } finally spark.sql(s"DROP TABLE `$table`")
   }
 }

@@ -41,13 +41,13 @@ class Scd2PropertySpec extends AnyFunSuite {
         if (r.isNullAt(4)) None else Some(r.getLong(4)), r.getBoolean(5)))
   }
 
-  /** Same fold, but PERSISTED through a backend per batch — the
-    * property then also covers the bucketed table's point-lookup +
-    * replace-all-delta dataflow (prior history restricted to the
-    * batch's keys must reproduce the pure fold exactly). */
+  /** Same fold, but PERSISTED through the bucketed table per batch —
+    * the property then also covers its point-lookup + replace-all-delta
+    * dataflow (prior history restricted to the batch's keys must
+    * reproduce the pure fold exactly). */
   private def foldPersisted(
       batches: Seq[Seq[Ev]],
-      mk: String => StreamScd2.Scd2History): Seq[(Long, Long, String, Long, Option[Long], Boolean)] = {
+      mk: String => Scd2BucketedTable): Seq[(Long, Long, String, Long, Option[Long], Boolean)] = {
     import spark.implicits._
     val t = mk(java.nio.file.Files.createTempDirectory("scd2prop").toString + "/hist")
     batches.filter(_.nonEmpty).zipWithIndex.foreach { case (b, i) =>

@@ -77,10 +77,9 @@ class StreamScd2Spec extends AnyFunSuite {
     assert(streamed === batchBuild)
   }
 
-  for ((backendName, mk) <- Seq[(String, String => StreamScd2.Scd2History)](
-      ("legacy", d => new StreamScd2.Scd2Table(spark, d)),
-      ("bucketed", d => new Scd2BucketedTable(spark, d, nBuckets = 4, compactThreshold = 3))))
-  test(s"persisted $backendName table: batch replay is a no-op, restart resumes exactly") {
+  private def mk(d: String) = new Scd2BucketedTable(spark, d, nBuckets = 4, compactThreshold = 3)
+
+  test("persisted bucketed table: batch replay is a no-op, restart resumes exactly") {
     import spark.implicits._
     val base = Files.createTempDirectory("sscd2t").toString
     def batch(rs: (Long, String, Long, Long)*) =
@@ -109,10 +108,7 @@ class StreamScd2Spec extends AnyFunSuite {
       (1L, 3L, "c", 30L, None, true)))
   }
 
-  for ((backendName, mk) <- Seq[(String, String => StreamScd2.Scd2History)](
-      ("legacy", d => new StreamScd2.Scd2Table(spark, d)),
-      ("bucketed", d => new Scd2BucketedTable(spark, d, nBuckets = 4, compactThreshold = 3))))
-  test(s"$backendName: crash between table-write and offset-commit: restart re-offers, merge skips") {
+  test("bucketed: crash between table-write and offset-commit: restart re-offers, merge skips") {
     val base = Files.createTempDirectory("sscd2x").toString
     val ev = graft.ops.Tables.events(spark, dir)
       .withColumn("sec", expr("ts_ns div 1000000000"))
@@ -280,16 +276,17 @@ class StreamScd2Spec extends AnyFunSuite {
       rs.toDF("key", "attr", "sec", "event_id")
     val bucketed = new Scd2BucketedTable(spark, s"$base/hist", nBuckets = 2,
       compactThreshold = 2, retainManifests = 1)
-    val legacy = new StreamScd2.Scd2Table(spark, s"$base/ref")
-    // same event stream through both backends; attrs cycle so versions pile up
+    // the reference: the pure MERGE chained in memory over the whole
+    // history; attrs cycle so versions pile up
+    var ref = StreamScd2.emptyHistory(spark)
     (0 until 6).foreach { i =>
       val b = batch((0L until 8L).map(k => (k, s"v$i", 10L + i, i * 100L + k)): _*)
       assert(bucketed.applyIfNew(b, i.toLong))
-      assert(legacy.applyIfNew(b, i.toLong))
+      ref = StreamScd2.applyBatch(ref, b).localCheckpoint()
     }
     val b1 = rows(StreamScd2.asQueryResult(bucketed.read()))
-    val l1 = rows(StreamScd2.asQueryResult(legacy.read()))
-    assert(b1 === l1, "bucketed and legacy histories must be identical")
+    val r1 = rows(StreamScd2.asQueryResult(ref))
+    assert(b1 === r1, "bucketed history must equal the in-memory MERGE chain")
     // compaction must have fired (threshold 2, 6 commits, every bucket
     // dirty each time) — at least one base dir exists
     val dirs = StateIO.list(s"$base/hist/data").map(_.getPath.getName)

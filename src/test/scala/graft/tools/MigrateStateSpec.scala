@@ -11,7 +11,8 @@ import graft.streaming.{Scd2BucketedTable, StreamScd2}
 /** The offline legacy→bucketed migration: post-migration reads must be
   * row-identical, the legacy pointer must be retired only after the
   * verification pass, and a resuming tail must land on the bucketed
-  * path with its replay guard intact. */
+  * path with its replay guard intact. Legacy fixtures are written and
+  * read through [[LegacyLayout]]. */
 class MigrateStateSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -22,16 +23,16 @@ class MigrateStateSpec extends AnyFunSuite {
     import spark.implicits._
     val dir = Files.createTempDirectory("mig_cdc").toString + "/state"
     // two legacy commits so the migration reads a non-trivial chain tip
-    StateStore.write(Seq(
+    LegacyLayout.writeCdc(Seq(
       ("a", """{"_id":"a","x":1}""", null: String, 10L),
       ("b", """{"_id":"b","x":2}""", null: String, 11L),
     ).toDF("id", "doc", "parent", "ts"), dir)
-    StateStore.write(Seq(
+    LegacyLayout.writeCdc(Seq(
       ("a", """{"_id":"a","x":5}""", null: String, 20L),
       ("b", """{"_id":"b","x":2}""", null: String, 11L),
       ("c", """{"_id":"c","x":3}""", "p1", 21L),
     ).toDF("id", "doc", "parent", "ts"), dir)
-    val before = sortedRows(StateStore.read(spark, dir))
+    val before = sortedRows(LegacyLayout.readCdc(spark, dir))
 
     val spec = BucketedStateStore.Spec(nBuckets = 4)
     val rep = MigrateState.migrateCdc(spark, dir, spec)
@@ -39,13 +40,12 @@ class MigrateStateSpec extends AnyFunSuite {
 
     // the swap happened: legacy pointer retired (content preserved),
     // bucketed manifest authoritative, reads identical
-    assert(StateStore.currentVersion(dir).isEmpty)
+    assert(!StateIO.exists(s"$dir/VERSION"))
     assert(StateIO.exists(s"$dir/VERSION.premigration"))
     assert(BucketedStateStore.exists(dir))
     assert(sortedRows(StateStore.read(spark, dir)) === before)
-    // a restarting tail now resolves the bucketed backend even without
-    // an explicit request
-    assert(StateStore.resolveBackend(dir, None) === Some(BucketedStateStore.Spec()))
+    // a restarting Runner now opens the directory as backfilled state
+    assert(StateStore.exists(dir))
 
     // and the bucketed path accepts the next micro-batch's commit
     val delta = Seq(
@@ -68,20 +68,18 @@ class MigrateStateSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("mig_scd2").toString + "/hist"
     def batch(rs: (Long, String, Long, Long)*) =
       rs.toDF("key", "attr", "sec", "event_id")
-    val legacy = new StreamScd2.Scd2Table(spark, dir)
-    assert(legacy.applyIfNew(batch((1L, "a", 10L, 1L)), batchId = 0L))
-    assert(legacy.applyIfNew(batch((1L, "b", 20L, 2L), (2L, "x", 5L, 3L)), batchId = 1L))
-    val before = sortedRows(StreamScd2.asQueryResult(legacy.read()))
+    LegacyLayout.writeScd2(spark, dir, batch((1L, "a", 10L, 1L)), batchId = 0L)
+    LegacyLayout.writeScd2(spark, dir, batch((1L, "b", 20L, 2L), (2L, "x", 5L, 3L)), batchId = 1L)
+    val before = sortedRows(StreamScd2.asQueryResult(LegacyLayout.readScd2(spark, dir)))
 
     val rep = MigrateState.migrateScd2(spark, dir, nBuckets = 4)
     assert(rep.lastBatchId === 1L)
     assert(rep.rows === 3L) // (1,a) closed, (1,b) open, (2,x) open
 
-    // factory resolution lands on the bucketed backend with identical
-    // content and the replay guard carried over
+    // the factory opens the migrated history with identical content and
+    // the replay guard carried over
     assert(!StateIO.exists(s"$dir/VERSION"))
     val t2 = StreamScd2.table(spark, dir)
-    assert(t2.isInstanceOf[Scd2BucketedTable])
     assert(t2.lastBatchId === 1L)
     assert(sortedRows(StreamScd2.asQueryResult(t2.read())) === before)
 
@@ -98,13 +96,13 @@ class MigrateStateSpec extends AnyFunSuite {
   test("cdc: a legacy commit landing mid-migration aborts the swap (single-writer CAS)") {
     import spark.implicits._
     val dir = Files.createTempDirectory("mig_cas").toString + "/state"
-    StateStore.write(Seq(
+    LegacyLayout.writeCdc(Seq(
       ("a", """{"_id":"a","x":1}""", null: String, 10L),
     ).toDF("id", "doc", "parent", "ts"), dir)
 
     // interpose a live tail's commit between the migration's snapshot
     // and its pointer swap — exactly the window the CAS must close
-    MigrateState.preSwapHook = () => StateStore.write(Seq(
+    MigrateState.preSwapHook = () => LegacyLayout.writeCdc(Seq(
       ("a", """{"_id":"a","x":1}""", null: String, 10L),
       ("z", """{"_id":"z","x":9}""", null: String, 99L),
     ).toDF("id", "doc", "parent", "ts"), dir)
@@ -118,8 +116,8 @@ class MigrateStateSpec extends AnyFunSuite {
     // the aborted migration withdrew its manifest: the directory is
     // unambiguously legacy and the interposed commit is fully visible
     assert(!BucketedStateStore.exists(dir))
-    assert(StateStore.currentVersion(dir).isDefined)
-    val ids = StateStore.read(spark, dir).collect().map(_.getString(0)).toSet
+    assert(StateIO.exists(s"$dir/VERSION"))
+    val ids = LegacyLayout.readCdc(spark, dir).collect().map(_.getString(0)).toSet
     assert(ids === Set("a", "z"))
 
     // with the writer quiesced, a re-run succeeds and carries the
@@ -134,17 +132,19 @@ class MigrateStateSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("mig_crash").toString + "/state"
     val df = Seq(("a", """{"_id":"a","x":1}""", null: String, 10L))
       .toDF("id", "doc", "parent", "ts")
-    StateStore.write(df, dir)
-    val before = sortedRows(StateStore.read(spark, dir))
+    LegacyLayout.writeCdc(df, dir)
+    val before = sortedRows(LegacyLayout.readCdc(spark, dir))
 
     // simulate the crash: the bucketed layout was fully seeded but the
     // run died before verify/swap — manifest AND legacy pointer coexist
-    BucketedStateStore.seed(spark.read.parquet(s"$dir/v_0"), dir,
+    BucketedStateStore.seed(LegacyLayout.readCdc(spark, dir), dir,
       BucketedStateStore.Spec(nBuckets = 4))
     assert(BucketedStateStore.exists(dir) && StateIO.exists(s"$dir/VERSION"))
 
-    // resolution order still prefers the legacy pointer: reads unchanged
-    assert(sortedRows(StateStore.read(spark, dir)) === before)
+    // the engine refuses the half-migrated directory; legacy data intact
+    val refused = intercept[IllegalStateException](StateStore.read(spark, dir))
+    assert(refused.getMessage.contains("MigrateState"))
+    assert(sortedRows(LegacyLayout.readCdc(spark, dir)) === before)
 
     // a re-run must refuse with the remediation pointer, not overwrite
     val ex = intercept[IllegalArgumentException] {
@@ -152,22 +152,18 @@ class MigrateStateSpec extends AnyFunSuite {
     }
     assert(ex.getMessage.contains("inspect VERSION.premigration"))
     assert(StateIO.exists(s"$dir/VERSION"), "legacy pointer must survive a refused re-run")
-    assert(sortedRows(StateStore.read(spark, dir)) === before)
+    assert(sortedRows(LegacyLayout.readCdc(spark, dir)) === before)
   }
 
   test("scd2: a legacy commit landing mid-migration aborts the swap (single-writer CAS)") {
     import spark.implicits._
     val dir = Files.createTempDirectory("mig_scd2_cas").toString + "/hist"
-    val legacy = new StreamScd2.Scd2Table(spark, dir)
-    assert(legacy.applyIfNew(
-      Seq((1L, "a", 10L, 1L)).toDF("key", "attr", "sec", "event_id"), batchId = 0L))
+    LegacyLayout.writeScd2(spark, dir,
+      Seq((1L, "a", 10L, 1L)).toDF("key", "attr", "sec", "event_id"), batchId = 0L)
 
     // a live tail commits batch 1 between the snapshot and the swap
-    MigrateState.preSwapHook = () => {
-      val t = new StreamScd2.Scd2Table(spark, dir)
-      assert(t.applyIfNew(
-        Seq((2L, "x", 20L, 2L)).toDF("key", "attr", "sec", "event_id"), batchId = 1L))
-    }
+    MigrateState.preSwapHook = () => LegacyLayout.writeScd2(spark, dir,
+      Seq((2L, "x", 20L, 2L)).toDF("key", "attr", "sec", "event_id"), batchId = 1L)
     try {
       val ex = intercept[IllegalStateException] { MigrateState.migrateScd2(spark, dir, 4) }
       assert(ex.getMessage.contains("concurrent writer"))
@@ -180,16 +176,15 @@ class MigrateStateSpec extends AnyFunSuite {
     val rep = MigrateState.migrateScd2(spark, dir, 4)
     assert(rep.lastBatchId === 1L)
     val t2 = StreamScd2.table(spark, dir)
-    assert(t2.isInstanceOf[Scd2BucketedTable])
+    assert(t2.lastBatchId === 1L)
     assert(t2.read().select("key").distinct().count() === 2L)
   }
 
   test("scd2: a failed verification leaves the directory unambiguously legacy") {
     import spark.implicits._
     val dir = Files.createTempDirectory("mig_fail").toString + "/hist"
-    val legacy = new StreamScd2.Scd2Table(spark, dir)
-    assert(legacy.applyIfNew(
-      Seq((1L, "a", 10L, 1L)).toDF("key", "attr", "sec", "event_id"), batchId = 0L))
+    LegacyLayout.writeScd2(spark, dir,
+      Seq((1L, "a", 10L, 1L)).toDF("key", "attr", "sec", "event_id"), batchId = 0L)
     // no bucketed layout and no retired pointer may survive a failed
     // attempt; simulate one by pre-planting a foreign manifest, which
     // the tool must refuse outright

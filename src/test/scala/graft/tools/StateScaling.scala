@@ -3,13 +3,12 @@ package graft.tools
 import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.cdc.{BatchApplier, BucketedStateStore, OplogRow, StateStore}
+import graft.cdc.{BucketedStateStore, OplogRow}
 import graft.model.{BsonTs, TaskSpec}
 
 /** Dev-only probe for the incremental state store's scaling claim: with
   * a PRE-SEEDED large state (K keys) and small update batches (B
-  * events), per-batch wall must track B for the bucketed store while
-  * the legacy path tracks K (full read + reshuffle + rewrite).
+  * events), per-batch wall must track B, not K.
   *
   * Two key distributions per batch:
   *  - `local`:  batch i updates the contiguous range [iB, iB+B) — the
@@ -20,12 +19,11 @@ import graft.model.{BsonTs, TaskSpec}
   *    every bucket is dirty, so the read side scans ~all bucket files
   *    (columnar, join-filtered, no shuffle) but the WRITE stays O(B).
   *
-  * Run: SPARK_GRAFT_CPUS=16 sbt "Test/runMain graft.tools.StateScaling 2000000 20000 5 256 local both"
-  *      args: [keys] [batchSize] [numBatches] [nBuckets] [local|uniform] [bucketed|legacy|both] [docBytes]
+  * Run: SPARK_GRAFT_CPUS=16 sbt "Test/runMain graft.tools.StateScaling 2000000 20000 5 256 local"
+  *      args: [keys] [batchSize] [numBatches] [nBuckets] [local|uniform] [docBytes]
   * `docBytes` pads every document to roughly that size — the
   * write-dominant regime (real sink docs are ~KBs, not the probe's
-  * default ~60 B) where the legacy path pays the full state rewrite
-  * per byte every trigger.
+  * default ~60 B).
   */
 object StateScaling {
   def main(args: Array[String]): Unit = {
@@ -34,8 +32,7 @@ object StateScaling {
     val numBatches = args.lift(2).map(_.toInt).getOrElse(5)
     val nBuckets = args.lift(3).map(_.toInt).getOrElse(256)
     val dist = args.lift(4).getOrElse("local")
-    val mode = args.lift(5).getOrElse("both")
-    val docBytes = args.lift(6).map(_.toInt).getOrElse(0)
+    val docBytes = args.lift(5).map(_.toInt).getOrElse(0)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
 
     val spark = SparkSession.builder()
@@ -86,36 +83,19 @@ object StateScaling {
         lit(false).as("fromMigrate")).as[OplogRow]
     }
 
-    def run(name: String, apply: (org.apache.spark.sql.Dataset[OplogRow], Int) => Unit): Unit = {
-      (1 to numBatches).foreach { i =>
-        val b = batch(i).persist()
-        b.count() // materialize input outside the timed window
-        val t0 = System.nanoTime()
-        apply(b, i)
-        val sec = (System.nanoTime() - t0) / 1e9
-        println(f"""{"probe":"state_scaling","path":"$name","keys":$keys,"batch":$batchSize,"dist":"$dist","i":$i,"sec":$sec%.3f}""")
-        b.unpersist()
-      }
-    }
-
-    if (mode == "bucketed" || mode == "both") {
-      val dir = Files.createTempDirectory("scal_bucketed").toString
-      val spec = BucketedStateStore.Spec(nBuckets = nBuckets, compactThreshold = 8)
-      val t0 = System.nanoTime()
-      BucketedStateStore.seed(seedState, dir, spec)
-      println(f"""{"probe":"state_scaling","path":"bucketed","event":"seed","keys":$keys,"sec":${(System.nanoTime() - t0) / 1e9}%.3f}""")
-      run("bucketed", (b, _) => { BucketedStateStore.applyBatch(b, task, dir, spec); () })
-    }
-    if (mode == "legacy" || mode == "both") {
-      val dir = Files.createTempDirectory("scal_legacy").toString
-      val t0 = System.nanoTime()
-      StateStore.write(seedState, dir)
-      println(f"""{"probe":"state_scaling","path":"legacy","event":"seed","keys":$keys,"sec":${(System.nanoTime() - t0) / 1e9}%.3f}""")
-      run("legacy", (b, _) => {
-        val st = StateStore.read(spark, dir)
-        StateStore.write(BatchApplier.applyOplogBatch(b, st, task), dir)
-        ()
-      })
+    val dir = Files.createTempDirectory("scal_bucketed").toString
+    val spec = BucketedStateStore.Spec(nBuckets = nBuckets, compactThreshold = 8)
+    val t0 = System.nanoTime()
+    BucketedStateStore.seed(seedState, dir, spec)
+    println(f"""{"probe":"state_scaling","path":"bucketed","event":"seed","keys":$keys,"sec":${(System.nanoTime() - t0) / 1e9}%.3f}""")
+    (1 to numBatches).foreach { i =>
+      val b = batch(i).persist()
+      b.count() // materialize input outside the timed window
+      val t1 = System.nanoTime()
+      BucketedStateStore.applyBatch(b, task, dir, spec)
+      val sec = (System.nanoTime() - t1) / 1e9
+      println(f"""{"probe":"state_scaling","path":"bucketed","keys":$keys,"batch":$batchSize,"dist":"$dist","i":$i,"sec":$sec%.3f}""")
+      b.unpersist()
     }
     spark.stop()
   }

@@ -73,8 +73,8 @@ object StreamSoak {
     val task = TaskSpec(Vector("value" -> "value", "n" -> "n"))
     val cfg = Runner.TaskPipeline(task, "db.c", s"$base/state", s"$base/ckpt",
       triggerMs = 50L,
-      buckets = Some(graft.cdc.BucketedStateStore.Spec(
-        nBuckets = nBuckets, compactThreshold = 4, retainManifests = 2)))
+      spec = graft.cdc.BucketedStateStore.Spec(
+        nBuckets = nBuckets, compactThreshold = 4, retainManifests = 2))
 
     val rnd = new scala.util.Random(17)
     var fileNo = 0

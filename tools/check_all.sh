@@ -1,11 +1,16 @@
 #!/usr/bin/env bash
-# One-command gate: compile, tests, oracle parity at both verify SFs,
-# and the sf0.1 bench. Mirrors exactly what the driver runs.
+# One-command gate: compile, tests, the CDC benchmark self-test, oracle
+# parity at both verify SFs, and the sf0.1 bench.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
 echo "== compile + tests =="
 sbt -batch test
+
+# compiles the CDC benchmark's Scala code against the engine sources, so an
+# engine API change that breaks the benchmark fails here
+echo "== CDC benchmark self-test =="
+python3 cdcbench/selftest.py
 
 echo "== verify + oracle @ sf0.01 =="
 SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-8}" \
